@@ -50,10 +50,19 @@ object Dedup {
     * both sides shuffle on the digest key. */
   def incrementalDigestDedup(batch: DataFrame, storeDigests: DataFrame,
                              textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    batch
-      .select(sha2(col(textCol), 256).as("h"), col(idCol))
-      .groupBy(col("h")).agg(min(col(idCol)).as(idCol))
-      .join(storeDigests.select(col("h")).distinct(), Seq("h"), "left_anti")
+    freshDigests(batch.select(sha2(col(textCol), 256).as("h"), col(idCol)), storeDigests, idCol)
+
+  /** [[incrementalDigestDedup]] over a batch that already carries its
+    * sha256 digest as `h` — for callers that pin the digested batch
+    * once and hand it to several consumers (the streaming ingest), so
+    * the sha256 pass is not repeated per consumer. */
+  private[graft] def freshDigests(hashed: DataFrame, storeDigests: DataFrame,
+                                  idCol: String = "doc_id"): DataFrame =
+    // no distinct on the store side: an anti join's answer ignores
+    // duplicate keys, and a distinct would only add an aggregate (and,
+    // when the store side is broadcast, a shuffle) ahead of it
+    hashed.groupBy(col("h")).agg(min(col(idCol)).as(idCol))
+      .join(storeDigests.select(col("h")), Seq("h"), "left_anti")
 
   /** Cross-corpus PARAGRAPH-frequency dedup (the MassiveText /
     * Gopher-class "remove duplicated paragraphs" stage, Rae et al.
@@ -388,10 +397,14 @@ object Dedup {
     * h_i(s) = a_i * xxhash64(s) + b_i with wrapping 64-bit arithmetic
     * (requires spark.sql.ansi.enabled=false); signature element i is the
     * min over the document's shingles. One shuffle (groupBy doc_id),
-    * k aggregates computed map-side in a single pass. */
+    * k aggregates computed map-side in a single pass. The shingle ids
+    * are NOT made distinct first: a min over a multiset equals the min
+    * over its set, so a distinct would only add a shuffle keyed on
+    * (doc, shingle) ahead of the one on doc. */
   def minhashSignatures(docs: DataFrame, w: Int = 3, k: Int = 32,
                         textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val sh = shingleIds(docs, w, textCol, idCol)
+    val sh = rawShingles(docs, w, textCol, idCol)
+      .select(col("doc_id"), xxhash64(col("shingle")).as("sh"))
     val aggs = (0 until k).map { i =>
       val a = splitmix64(2L * i) | 1L // odd multiplier
       val b = splitmix64(2L * i + 1)
@@ -432,12 +445,26 @@ object Dedup {
     * Admission is at LSH's operating point (the r-row/b-band S-curve),
     * not exact-Jaccard — exact verification would need stored
     * shingles, which the store deliberately trades away for size.
-    * Returns the admitted batch rows; append [[bandKeys]] of the
-    * admitted set to the store to complete the ingest cycle. */
+    * Returns the admitted batch rows, pinned; append [[bandKeys]] of
+    * the admitted set to the store to complete the ingest cycle. */
   def incrementalMinhashDedup(batch: DataFrame, bandStore: DataFrame,
                               w: Int = 3, k: Int = 32, bands: Int = 8,
-                              textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    // consumed twice (internal self-join + store semi join)
+                              textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+    minhashAdmission(batch, bandStore, w, k, bands, textCol, idCol)._1
+
+  /** The admission behind [[incrementalMinhashDedup]], shared by batch
+    * callers and the streaming ingest: returns the admitted batch rows
+    * AND the (band, bh) keys of the admitted documents — exactly
+    * `bandKeys(admitted)`, but read off the two pins the admission
+    * already built (the band keys of the whole batch, the admitted
+    * rows), so the caller's store commit re-runs no shingling and no
+    * signature pass. */
+  private[graft] def minhashAdmission(batch: DataFrame, bandStore: DataFrame,
+                                      w: Int = 3, k: Int = 32, bands: Int = 8,
+                                      textCol: String = "text",
+                                      idCol: String = "doc_id"): (DataFrame, DataFrame) = {
+    // consumed three times: internal self-join, store semi join, and
+    // the admitted set's band keys
     val banded = bandKeys(batch, w, k, bands, textCol, idCol).truncateLineage
     val internal = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
@@ -446,9 +473,14 @@ object Dedup {
     val vsStore = banded
       .join(bandStore.select(col("band"), col("bh")), Seq("band", "bh"), "left_semi")
       .select(col("doc_id"))
-    val dropIds = internal.unionByName(vsStore).distinct()
-      .withColumnRenamed("doc_id", idCol)
-    batch.join(dropIds, Seq(idCol), "left_anti")
+    // left as a multiset: the anti join below ignores duplicate ids
+    val dropIds = internal.unionByName(vsStore).withColumnRenamed("doc_id", idCol)
+    // consumed by the caller and by the admitted band keys below
+    val admitted = batch.join(dropIds, Seq(idCol), "left_anti").truncateLineage
+    val admittedBands = banded
+      .join(admitted.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_semi")
+      .select(col("band"), col("bh"))
+    (admitted, admittedBands)
   }
 
   /** LSH banding: split the k-wide signature into `bands` bands of

@@ -14,10 +14,17 @@ object Sinks {
     * sort within each — the exact contract of
     * Process_<pid>_Output_File.txt (ownership via hashpartitioning
     * instead of the reference's affine char-sum hash; final counts are
-    * hash-independent, SURVEY.md §2.2). */
+    * hash-independent, SURVEY.md §2.2).
+    *
+    * The exchange keys on a 64-bit hash OF the key, not the key itself:
+    * after an aggregate on `key` with n = spark.sql.shuffle.partitions
+    * an exchange on the bare key is semantically equal to the
+    * aggregate's own, so the planner drops it as redundant — and AQE
+    * then coalesces the aggregate's exchange, writing ONE file instead
+    * of n. A user repartition to a fixed count is never coalesced. */
   def partitionedSortedText(df: DataFrame, key: String, n: Int, outPath: String,
                             format: Column): Unit =
-    df.repartition(n, col(key))
+    df.repartition(n, xxhash64(col(key)))
       .sortWithinPartitions(key)
       .select(format.as("value"))
       .write.mode("overwrite").text(outPath)

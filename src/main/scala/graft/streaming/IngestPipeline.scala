@@ -36,6 +36,12 @@ import graft.plans.Lineage.TruncateOps
   * scan — and with `bloomBits` set, even that is cut to a batch-sized
   * candidate set before the shuffle (a batch-built broadcast Bloom
   * filter in the store scan's predicate; exact, see [[ingestBatch]]).
+  *
+  * Each micro-batch reads its file ONCE, hashes it once and shingles
+  * it once: every batch-derived relation with two or more consumers is
+  * pinned (graft.plans.Lineage), each pin batch-sized, so no consumer
+  * re-runs the scan, the sha256 pass or the MinHash pass behind it.
+  * [[ingestBatch]] lists the pins and their consumers.
   */
 object IngestPipeline {
 
@@ -92,23 +98,48 @@ object IngestPipeline {
     * kill a batch row survives the filter; false positives only cost
     * wasted probe rows. At 100 TB this is the difference between
     * shuffling the full digest history every micro-batch and shuffling
-    * a batch-sized candidate set. */
-  /** `bandStoreDir`, when set, adds a NEAR-dup admission stage after
+    * a batch-sized candidate set.
+    *
+    * `bandStoreDir`, when set, adds a NEAR-dup admission stage after
     * the exact-digest one: documents whose LSH band keys collide with
     * the persisted band store (or a lower-id batch mate) drop — the
     * [[graft.operators.Dedup.incrementalMinhashDedup]] semantics under
     * the same batch-keyed AS-OF/commit discipline as the digest store,
     * so replays stay idempotent. Band keys of ADMITTED documents
     * commit pre-resample (a later near-dup of a sampled-out doc is
-    * still a near-dup — the digest contract, extended). */
+    * still a near-dup — the digest contract, extended).
+    *
+    * Scale shape per micro-batch — the batch's file is scanned once
+    * (a streaming batch re-runs its source scan for every action that
+    * reads it), and each pin below is batch-sized with two or more
+    * consumers:
+    *  - `hashed` (doc_id, lang, text, h): the fanned-out batch with its
+    *    sha256 — the ONE file scan and ONE sha256 pass. Read by the
+    *    fresh-digest aggregate, the survivors join and (with
+    *    `bloomBits`) the Bloom key set.
+    *  - `survivors`: one row per digest new to the store, its min-id
+    *    row, carrying `h`. Read by the near-dup stage (or the landing's
+    *    count and write) and by the digest commit.
+    *  - the batch's band keys and the admitted rows, both pinned inside
+    *    Dedup.minhashAdmission — the ONE MinHash pass. The band keys
+    *    feed the batch self-join, the store semi join and the band
+    *    commit; the admitted rows feed the landing's count and write
+    *    and select the committed band keys. */
   def ingestBatch(batch: DataFrame, batchId: Long, storeDir: String,
                   rates: DataFrame, outDir: String, targetRowsPerFile: Long,
                   chunkSize: Int, bloomBits: Long = 0L,
                   bloomItems: Long = 100000L,
                   bandStoreDir: Option[String] = None): Unit = {
     val ss = batch.sparkSession
-    val batchP = fanOut(batch, "doc_id") // sha256/minhash/chunk work parallel
     healStore(storeDir) // finish any interrupted compaction swap first
+    // the batch's ONE file scan and ONE sha256 pass, fanned out so the
+    // digest/minhash/chunk work runs parallel. A (digest, id) pair
+    // repeated verbatim keeps one row; when the fan-out fires it has
+    // already co-located each id, so the dedup adds no shuffle.
+    val hashed = fanOut(batch, "doc_id")
+      .select(col("doc_id"), col("lang"), col("text"), sha2(col("text"), 256).as("h"))
+      .dropDuplicates("h", "doc_id")
+      .truncateLineage
     // the store AS OF this batch: seed + strictly earlier commits
     val priorDirs = s"$storeDir/seed" +:
       storeBatchIds(storeDir).filter(_ < batchId).map(i => s"$storeDir/b$i")
@@ -119,19 +150,23 @@ object IngestPipeline {
         // might_contain probes on BIGINT: key the filter on the 64-bit
         // hash of the digest on BOTH sides (equal digests → equal
         // hashes, so the no-false-negative guarantee carries over)
-        batchP.select(xxhash64(sha2(col("text"), 256)).as("k")), "k",
+        hashed.select(xxhash64(col("h")).as("k")), "k",
         storeAll.withColumn("__k", xxhash64(col("h"))), "__k",
         bloomItems, bloomBits).drop("__k")
-    val fresh = Dedup.incrementalDigestDedup(batchP, store)
-    val survivors = batchP.join(fresh.select(col("doc_id")), Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("text"))
-    // near-dup admission against the band store AS OF this batch
-    val admitted = bandStoreDir.fold(survivors) { bd =>
-      val bandPrior = ss.read.parquet(s"$bd/seed" +:
-        storeBatchIds(bd).filter(_ < batchId).map(i => s"$bd/b$i"): _*)
-      Dedup.incrementalMinhashDedup(survivors, bandPrior)
-        .truncateLineage // consumed twice: resample + band commit
-    }
+    val fresh = Dedup.freshDigests(hashed, store)
+    // one row per admitted digest: its min-id row. The join keys on the
+    // digest AS WELL AS the id, so a doc_id repeated in the batch lands
+    // only the text whose digest is fresh.
+    val survivors = hashed.join(fresh, Seq("h", "doc_id")).truncateLineage
+    // near-dup admission against the band store AS OF this batch; the
+    // admitted docs' band keys come back read off the admission's pins
+    val (admitted, bandCommit) =
+      bandStoreDir.fold((survivors, Option.empty[(DataFrame, String)])) { bd =>
+        val bandPrior = ss.read.parquet(s"$bd/seed" +:
+          storeBatchIds(bd).filter(_ < batchId).map(i => s"$bd/b$i"): _*)
+        val (rows, keys) = Dedup.minhashAdmission(survivors, bandPrior)
+        (rows, Some(keys -> s"$bd/b$batchId"))
+      }
     val kept = Corpus.resampleWithRates(admitted, rates)
       .select(col("doc_id"), col("lang"), col("text"))
     val chunks = Corpus.chunk(kept, chunkSize)
@@ -139,10 +174,8 @@ object IngestPipeline {
     graft.sources.Sinks.writeCompacted(chunks, s"$outDir/batch_id=$batchId", targetRowsPerFile)
     // commit the batch's digests LAST (post-resample docs included:
     // a later duplicate of a sampled-out doc is still a duplicate)
-    fresh.select(col("h")).write.mode("overwrite").parquet(s"$storeDir/b$batchId")
-    bandStoreDir.foreach(bd =>
-      Dedup.bandKeys(admitted).select(col("band"), col("bh"))
-        .write.mode("overwrite").parquet(s"$bd/b$batchId"))
+    survivors.select(col("h")).write.mode("overwrite").parquet(s"$storeDir/b$batchId")
+    bandCommit.foreach { case (keys, dir) => keys.write.mode("overwrite").parquet(dir) }
   }
 
   /** One micro-batch of PARAGRAPH-granularity incremental dedup — the

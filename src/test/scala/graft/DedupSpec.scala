@@ -183,6 +183,42 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.incrementalMinhashDedup(batch, grown).isEmpty)
   }
 
+  test("minhashAdmission: admitted band keys == bandKeys(admitted); admission matches the unshared formula") {
+    import org.apache.spark.sql.functions.col
+    val corpusText = "the quick brown fox jumps over the lazy dog again and again today"
+    val novelText = "completely different words about spark catalyst plans and shuffles here"
+    val store = Dedup.bandKeys(Seq((1L, corpusText)).toDF("doc_id", "text"))
+      .select(col("band"), col("bh"))
+    val batch = Seq(
+      (10L, "en", corpusText),                       // store clone: drops
+      (11L, "en", novelText),                        // admits
+      (12L, "fr", novelText.replace(" ", "  ")),     // whitespace variant of 11: drops
+      (13L, "en", "yet another unrelated text about lakes rivers and the open sea"),
+      (14L, "en", "too short")                       // no shingles, no bands: admits
+    ).toDF("doc_id", "lang", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("doc_id"), col("lang"), col("text")).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    // the admission spelled out from bandKeys alone, as the oracle
+    val banded = Dedup.bandKeys(batch)
+    val dropIds = banded.as("x").join(banded.as("y"),
+        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
+          col("x.doc_id") > col("y.doc_id"), "left_semi").select(col("doc_id"))
+      .unionByName(banded.join(store, Seq("band", "bh"), "left_semi").select(col("doc_id")))
+      .distinct()
+    val expected = rows(batch.join(dropIds, Seq("doc_id"), "left_anti"))
+    assert(expected.map(_._1) === Set(11L, 13L, 14L))
+    val (admitted, keys) = Dedup.minhashAdmission(batch, store)
+    assert(rows(admitted) === expected)
+    assert(rows(Dedup.incrementalMinhashDedup(batch, store)) === expected)
+    // the band commit read off the pins == the keys recomputed from scratch
+    def keySet(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("band"), col("bh")).collect().map(r => (r.getInt(0), r.getLong(1))).toSet
+    val recomputed = keySet(Dedup.bandKeys(admitted))
+    assert(recomputed.size === 16) // 8 bands each for docs 11 and 13; 14 has none
+    assert(keySet(keys) === recomputed)
+  }
+
   test("bestPerCluster keeps the highest-scoring member per family, min id on ties") {
     import spark.implicits._
     val clusters = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 5L), (6L, 5L))

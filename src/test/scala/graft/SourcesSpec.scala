@@ -51,20 +51,22 @@ class SourcesSpec extends AnyFunSuite {
     assert(pruned.count() === full.count() && pruned.count() > 0)
   }
 
+  /** The lines of each part file the sink wrote, in part order. */
+  private def sinkParts(out: String): Seq[Vector[String]] =
+    Files.list(Paths.get(out)).toArray.map(_.toString)
+      .filter { p =>
+        val name = Paths.get(p).getFileName.toString
+        name.startsWith("part-") && !name.endsWith(".crc")
+      }.sorted.toSeq
+      .map(p => scala.jdk.CollectionConverters.ListHasAsScala(
+        Files.readAllLines(Paths.get(p))).asScala.toVector)
+
   test("partitioned sorted text sink: disjoint ownership, sorted parts, reference format") {
     val out = Files.createTempDirectory("graft-sink").toString + "/wc"
     val wc = TextOps.wordCount(TextCorpus.readDocuments(spark, mkCorpus()))
     Sinks.partitionedSortedText(wc, "word", 3, out, Sinks.referenceLineFormat())
-    val parts = Files.list(Paths.get(out)).toArray.map(_.toString)
-      .filter { p =>
-        val name = Paths.get(p).getFileName.toString
-        name.startsWith("part-") && !name.endsWith(".crc")
-      }.sorted
-    assert(parts.length === 3)
-    val perPart = parts.map { p =>
-      scala.jdk.CollectionConverters.ListHasAsScala(
-        Files.readAllLines(Paths.get(p))).asScala.toVector
-    }
+    val perPart = sinkParts(out)
+    assert(perPart.length === 3)
     // format: <word, count> (trailing space), sorted within each part
     perPart.flatten.foreach(l => assert(l.matches("<[^,]+, \\d+> ")))
     perPart.foreach(ls => assert(ls === ls.sorted))
@@ -73,6 +75,25 @@ class SourcesSpec extends AnyFunSuite {
     for (i <- words.indices; j <- words.indices if i < j)
       assert(words(i).intersect(words(j)).isEmpty)
     assert(words.flatten.toSet.size === 7)
+  }
+
+  test("partitioned sorted text sink honours n == spark.sql.shuffle.partitions") {
+    // an exchange on the bare word would equal the aggregate's own at
+    // this n, be dropped as redundant, and leave AQE free to coalesce
+    // the sink down to one file
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val corpus = Files.createTempDirectory("graft-sink-n")
+    Files.writeString(corpus.resolve("words.txt"),
+      (0 until 64).map(i => s"word$i " * (1 + i % 3)).mkString("\n"))
+    val out = Files.createTempDirectory("graft-sink-n-out").toString + "/wc"
+    val wc = TextOps.wordCount(TextCorpus.readDocuments(spark, corpus.toString))
+    Sinks.partitionedSortedText(wc, "word", n, out, Sinks.referenceLineFormat())
+    val perPart = sinkParts(out)
+    assert(perPart.length === n)
+    perPart.foreach(ls => assert(ls.nonEmpty && ls === ls.sorted))
+    val words = perPart.map(_.map(_.drop(1).takeWhile(_ != ',')).toSet)
+    assert(words.map(_.size).sum === 64 && words.flatten.toSet.size === 64)
+    assert(perPart.flatten.toSet === (0 until 64).map(i => s"<word$i, ${1 + i % 3}> ").toSet)
   }
 
   test("Jsonl.readAudited: bad lines preserved verbatim, good rows parse, audit counts both") {

@@ -669,6 +669,76 @@ class StreamingSpec extends AnyFunSuite {
     assert(replayed === Set(2L, 6L))
   }
 
+  test("streaming ingest exact stage: a repeated doc_id lands only its fresh text, a repeated row once") {
+    import org.apache.spark.sql.functions.{col, sha2}
+    import graft.streaming.IngestPipeline
+    val storeDir = Files.createTempDirectory("graft-rep-st").toString
+    Seq("stored text").toDF("text").select(sha2($"text", 256).as("h"))
+      .write.parquet(s"$storeDir/seed")
+    val batch = Seq(
+      (1L, "en", "fresh text"),
+      (1L, "en", "stored text"),  // same id, digest already in the store
+      (4L, "en", "twice over"),
+      (4L, "en", "twice over")    // the same row delivered twice
+    ).toDF("doc_id", "lang", "text")
+    val rates = Seq(("en", 4L, 1000L)).toDF("lang", "n_l", "keep_permille")
+    val out = Files.createTempDirectory("graft-rep-o").toString
+    IngestPipeline.ingestBatch(batch, 0L, storeDir, rates, out,
+      targetRowsPerFile = 100L, chunkSize = 64)
+    val landed = spark.read.parquet(out).select(col("doc_id"), col("chunk")).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    assert(landed === Seq((1L, "fresh text"), (4L, "twice over")))
+    // each admitted digest commits once; the stored one does not recommit
+    val committed = spark.read.parquet(s"$storeDir/b0").collect().map(_.getString(0)).toSeq.sorted
+    val want = Seq("fresh text", "twice over").toDF("text").select(sha2($"text", 256))
+      .collect().map(_.getString(0)).toSeq.sorted
+    assert(committed === want)
+  }
+
+  test("streaming ingest scans each micro-batch's file once: numInputRows == rows in the file") {
+    import org.apache.spark.sql.functions.{col, sha2}
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import graft.streaming.IngestPipeline
+    import graft.operators.Dedup
+    val src = Files.createTempDirectory("graft-scan-src").toString
+    // three files of 3, 5 and 4 rows, one micro-batch each, in mtime order
+    val sizes = Seq(3, 5, 4)
+    sizes.zipWithIndex.foreach { case (n, b) =>
+      (0 until n).map(i => (b * 100L + i, "en", s"document $b $i with a few shared words"))
+        .toDF("doc_id", "lang", "text").coalesce(1).write.parquet(s"$src/.stage$b")
+      val part = new java.io.File(s"$src/.stage$b").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dest = new java.io.File(s"$src/d$b.parquet")
+      assert(part.renameTo(dest))
+      dest.setLastModified(1000000L * (b + 1))
+    }
+    val storeDir = Files.createTempDirectory("graft-scan-st").toString
+    Seq("unrelated").toDF("text").select(sha2($"text", 256).as("h"))
+      .write.parquet(s"$storeDir/seed")
+    val bandDir = Files.createTempDirectory("graft-scan-bs").toString
+    Dedup.bandKeys(Seq((0L, "an unrelated seed document")).toDF("doc_id", "text"))
+      .select(col("band"), col("bh")).write.parquet(s"$bandDir/seed")
+    val rates = Seq(("en", 1L, 1000L)).toDF("lang", "n_l", "keep_permille")
+    val inputRows = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) inputRows.put(e.progress.batchId, e.progress.numInputRows)
+    }
+    spark.streams.addListener(listener)
+    try {
+      IngestPipeline.runIngest(spark, src, storeDir, rates,
+        Files.createTempDirectory("graft-scan-o").toString, targetRowsPerFile = 100L,
+        chunkSize = 64, bandStoreDir = Some(bandDir))
+      // progress events arrive on the listener bus after the query stops
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (inputRows.size < sizes.size && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.streams.removeListener(listener)
+    val got = (0 until sizes.size).map(b => inputRows.get(b.toLong))
+    assert(got === sizes.map(_.toLong))
+  }
+
   test("streaming ANN ingest: grown index == batch append, replay idempotent, OOD batch flags rebuild") {
     import graft.operators.Similarity
     import org.apache.spark.sql.functions._
