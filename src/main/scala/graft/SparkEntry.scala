@@ -3481,8 +3481,7 @@ object SparkEntry {
             .cast("long").as("keep_permille"))
         .truncateLineage
       val storeDir = java.nio.file.Files.createTempDirectory("graft-wtstore").toString
-      ss.range(0).select(col("id").as("ph"))
-        .write.mode("overwrite").parquet(s"$storeDir/seed")
+      graft.streaming.IngestPipeline.paraStore(storeDir).seed(ss.range(0).select(col("id").as("ph")))
       val landDir = java.nio.file.Files.createTempDirectory("graft-wtland").toString
       val frontierDir = java.nio.file.Files.createTempDirectory("graft-wtfront").toString
       val stream = ss.readStream.format("binaryFile")
@@ -4036,9 +4035,8 @@ object SparkEntry {
       val collapsed = concat_ws(" ",
         filter(split(col("text"), "\\s+"), w => length(w) > 0))
       val storeDir = java.nio.file.Files.createTempDirectory("graft-htmlingest-store").toString
-      t(ss, d).documents.where(col("doc_id") % 2 === 0)
-        .select(sha2(collapsed, 256).as("h"))
-        .write.mode("overwrite").parquet(s"$storeDir/seed")
+      graft.streaming.IngestPipeline.digestStore(storeDir).seed(
+        t(ss, d).documents.where(col("doc_id") % 2 === 0).select(sha2(collapsed, 256).as("h")))
       val rates = Corpus.temperatureRates(
         t(ss, d).documents.select(col("doc_id"), col("lang"), collapsed.as("text")))
       val out = java.nio.file.Files.createTempDirectory("graft-htmlingest-out").toString
@@ -4061,8 +4059,7 @@ object SparkEntry {
       val src = stagePageStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val storeDir = java.nio.file.Files.createTempDirectory("graft-parastore").toString
-      ss.range(0).select(col("id").as("ph"))
-        .write.mode("overwrite").parquet(s"$storeDir/seed")
+      graft.streaming.IngestPipeline.paraStore(storeDir).seed(ss.range(0).select(col("id").as("ph")))
       val out = java.nio.file.Files.createTempDirectory("graft-paraout").toString
       val pages = readPageStream(ss, src).select(col("doc_id"),
         regexp_replace(col("html"), "<div>\n",
@@ -5041,9 +5038,8 @@ object SparkEntry {
       val src = stageDocStream(s, d, nFiles = 4)
       val ss = streamSession(s)
       val storeDir = java.nio.file.Files.createTempDirectory("graft-ingest-store").toString
-      t(ss, d).documents.where(col("doc_id") % 2 === 0)
-        .select(sha2(col("text"), 256).as("h"))
-        .write.mode("overwrite").parquet(s"$storeDir/seed")
+      graft.streaming.IngestPipeline.digestStore(storeDir).seed(
+        t(ss, d).documents.where(col("doc_id") % 2 === 0).select(sha2(col("text"), 256).as("h")))
       val rates = Corpus.temperatureRates(
         t(ss, d).documents.select(col("doc_id"), col("lang"), col("text")))
       val out = java.nio.file.Files.createTempDirectory("graft-ingest-out").toString

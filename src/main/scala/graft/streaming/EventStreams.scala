@@ -387,22 +387,6 @@ object EventStreams {
       }
   }
 
-  /** foreachBatch parquet sink with replay-idempotence: each micro-batch
-    * overwrites its OWN batch_id=<n> directory, so a batch re-delivered
-    * after a failure overwrites instead of appending duplicates — the
-    * standard exactly-once recipe for sinks without transactional
-    * commit. Read the target back with spark.read.parquet(outDir)
-    * (batch_id becomes a partition column). */
-  def runToParquet(streamed: DataFrame, outDir: String): Unit = {
-    val q = streamed.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
-
   /** foreachBatch composed with the size-governed batch sink
     * (Sinks.writeCompacted): each micro-batch lands as
     * `batch_id=<n>/` with file count ⌈rows/target⌉ and a
@@ -414,14 +398,9 @@ object EventStreams {
     * instead of a separate compaction job rewriting the table later. */
   def runToCompactedParquet(streamed: DataFrame, outDir: String,
                             targetRowsPerFile: Long): Unit = {
-    val q = streamed.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.sources.Sinks.writeCompacted(batch, s"$outDir/batch_id=$batchId", targetRowsPerFile)
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(streamed) { (batch, batchId) =>
+      graft.sources.Sinks.writeCompacted(batch, s"$outDir/batch_id=$batchId", targetRowsPerFile)
+    }
   }
 
   /** Streaming CDC → current-snapshot materialization: foreachBatch
@@ -472,26 +451,22 @@ object EventStreams {
           case s if s.startsWith("v") => scala.util.Try(s.drop(1).toLong).toOption.map(_ -> f)
           case _ => None
         })
-    val q = readEventStream(spark, srcDir).writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val images = latestOf(batch.select(col("user_id"), col("ts").as("last_ts"),
-          col("event_id").as("last_event_id"), col("event_type").as("last_type"),
-          col("value").as("last_value")))
-        // the replay contract needs "the version my original run read":
-        // versions are batchIds, so that is max(v) strictly below mine
-        val prev = versions(new java.io.File(tableDir))
-          .filter(_._1 < batchId).sortBy(_._1).lastOption
-        val merged = prev match {
-          case Some((_, dir)) => latestOf(ss.read.parquet(dir.toString).unionByName(images))
-          case None => images
-        }
-        merged.write.mode("overwrite")
-          .parquet(f"$tableDir/v$batchId%09d") // zero-padded: lexicographic = numeric
+    drain(readEventStream(spark, srcDir)) { (batch, batchId) =>
+      val ss = batch.sparkSession
+      val images = latestOf(batch.select(col("user_id"), col("ts").as("last_ts"),
+        col("event_id").as("last_event_id"), col("event_type").as("last_type"),
+        col("value").as("last_value")))
+      // the replay contract needs "the version my original run read":
+      // versions are batchIds, so that is max(v) strictly below mine
+      val prev = versions(new java.io.File(tableDir))
+        .filter(_._1 < batchId).sortBy(_._1).lastOption
+      val merged = prev match {
+        case Some((_, dir)) => latestOf(ss.read.parquet(dir.toString).unionByName(images))
+        case None => images
       }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      merged.write.mode("overwrite")
+        .parquet(f"$tableDir/v$batchId%09d") // zero-padded: lexicographic = numeric
+    }
     // an empty source dir yields zero micro-batches and zero versions —
     // return an empty latest-image relation instead of throwing on .last
     versions(new java.io.File(tableDir)).sortBy(_._1).lastOption match {
@@ -521,19 +496,14 @@ object EventStreams {
                          targetRowsPerFile: Long = 5000L): DataFrame = {
     require(graft.sources.LakeTable.versions(tableDir).isEmpty,
       s"runLatestImageLake needs a fresh tableDir: $tableDir (no checkpoint → batchIds restart)")
-    val q = readEventStream(spark, srcDir).writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val images = batch.select(col("user_id"), col("ts").as("last_ts"),
-          col("event_id").as("last_event_id"), col("event_type").as("last_type"),
-          col("value").as("last_value"))
-        graft.sources.LakeTable.commitLatestImageAt(images, tableDir, "user_id",
-          Seq("last_ts", "last_event_id", "last_type", "last_value"),
-          targetRowsPerFile, version = batchId)
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(readEventStream(spark, srcDir)) { (batch, batchId) =>
+      val images = batch.select(col("user_id"), col("ts").as("last_ts"),
+        col("event_id").as("last_event_id"), col("event_type").as("last_type"),
+        col("value").as("last_value"))
+      graft.sources.LakeTable.commitLatestImageAt(images, tableDir, "user_id",
+        Seq("last_ts", "last_event_id", "last_type", "last_value"),
+        targetRowsPerFile, version = batchId)
+    }
     if (graft.sources.LakeTable.versions(tableDir).isEmpty)
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         StructType(Seq(

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{Corpus, Dedup}
@@ -16,16 +16,11 @@ import graft.plans.Lineage.TruncateOps
   *   broadcast — see Corpus.temperatureRates) → context-window
   *   chunking → size-governed compacted landing.
   *
-  * Exactly-once discipline, the same two devices the other streaming
-  * sinks use (EventStreams.runToCompactedParquet / runLatestImageMerge):
-  *  - every write is KEYED BY BATCH ID and overwrites its own
-  *    directory: output lands in `outDir/batch_id=N/`, and the batch's
-  *    newly-seen digests commit to `storeDir/bN/` — a re-delivered
-  *    batch overwrites both instead of duplicating either;
-  *  - a batch reads only digest dirs with id < its own (the seed plus
-  *    every EARLIER commit), so a replay sees exactly the store its
-  *    original run saw — in particular it does NOT dedup against its
-  *    own previously-committed digests or a later batch's.
+  * Exactly-once: the digest store (and the band store) is a
+  * [[BatchKeyedStore]] — each batch reads it AS OF its own id and
+  * commits to `b<id>/` — and the landing overwrites its own
+  * `outDir/batch_id=N/`, so a re-delivered batch overwrites its
+  * output and its commits instead of duplicating either.
   *
   * Scale shape per micro-batch: digests are 32-byte keys aggregated
   * batch-side then anti-joined against the store scan (the
@@ -67,28 +62,24 @@ object IngestPipeline {
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
 
-  private def storeBatchIds(storeDir: String): Seq[Long] =
-    Option(new java.io.File(storeDir).listFiles()).toSeq.flatten
-      .filter(_.getName.startsWith("b"))
-      .flatMap(f => scala.util.Try(f.getName.drop(1).toLong).toOption)
-      .sorted
+  /** The digest store: the sha256 `h` of every text the stream has seen. */
+  def digestStore(dir: String): BatchKeyedStore =
+    BatchKeyedStore(dir, StructType(Seq(StructField("h", StringType))))
 
-  /** Crash recovery for [[compactStore]]'s two-rename swap: if a crash
-    * landed between renaming the old seed aside and renaming the new
-    * one in, the completed `.seed_next` is the truth — finish the swap.
-    * Called at the top of every store read/compact so the pipeline
-    * self-heals instead of failing on a missing seed dir. */
-  private def healStore(storeDir: String): Unit = {
-    val seed = new java.io.File(s"$storeDir/seed")
-    val next = new java.io.File(s"$storeDir/.seed_next")
-    if (!seed.exists() && next.exists())
-      require(next.renameTo(seed), s"store heal failed in $storeDir")
-    graft.sources.FsUtil.deleteRecursively(new java.io.File(s"$storeDir/.seed_old"))
-  }
+  /** The paragraph-hash store of [[paraIngestBatch]]: xxhash64 `ph`. */
+  def paraStore(dir: String): BatchKeyedStore =
+    BatchKeyedStore(dir, StructType(Seq(StructField("ph", LongType))))
+
+  private def bandStore(dir: String): BatchKeyedStore =
+    BatchKeyedStore(dir, StructType(Seq(StructField("band", IntegerType), StructField("bh", LongType))))
+
+  private def fpStore(dir: String): BatchKeyedStore =
+    BatchKeyedStore(dir, StructType(Seq(StructField("doc_id", LongType), StructField("fp", LongType))))
 
   /** One micro-batch of the ingest, exposed so the spec can re-run a
     * batch verbatim and prove replay idempotence. `rates` must be the
-    * fixed profile policy, not derived from `batch`.
+    * fixed profile policy, not derived from `batch`. Replays follow
+    * [[BatchKeyedStore]]'s exactly-once rule.
     *
     * `bloomBits > 0` fronts the store scan with a Bloom filter BUILT
     * FROM THE BATCH's digests (the small side) and broadcast into the
@@ -103,9 +94,9 @@ object IngestPipeline {
     * `bandStoreDir`, when set, adds a NEAR-dup admission stage after
     * the exact-digest one: documents whose LSH band keys collide with
     * the persisted band store (or a lower-id batch mate) drop — the
-    * [[graft.operators.Dedup.incrementalMinhashDedup]] semantics under
-    * the same batch-keyed AS-OF/commit discipline as the digest store,
-    * so replays stay idempotent. Band keys of ADMITTED documents
+    * [[graft.operators.Dedup.incrementalMinhashDedup]] semantics, the
+    * band store a [[BatchKeyedStore]] like the digest store, so replays
+    * stay idempotent. Band keys of ADMITTED documents
     * commit pre-resample (a later near-dup of a sampled-out doc is
     * still a near-dup — the digest contract, extended).
     *
@@ -128,10 +119,8 @@ object IngestPipeline {
   def ingestBatch(batch: DataFrame, batchId: Long, storeDir: String,
                   rates: DataFrame, outDir: String, targetRowsPerFile: Long,
                   chunkSize: Int, bloomBits: Long = 0L,
-                  bloomItems: Long = 100000L,
                   bandStoreDir: Option[String] = None): Unit = {
-    val ss = batch.sparkSession
-    healStore(storeDir) // finish any interrupted compaction swap first
+    val digests = digestStore(storeDir)
     // the batch's ONE file scan and ONE sha256 pass, fanned out so the
     // digest/minhash/chunk work runs parallel. A (digest, id) pair
     // repeated verbatim keeps one row; when the fan-out fires it has
@@ -140,10 +129,7 @@ object IngestPipeline {
       .select(col("doc_id"), col("lang"), col("text"), sha2(col("text"), 256).as("h"))
       .dropDuplicates("h", "doc_id")
       .truncateLineage
-    // the store AS OF this batch: seed + strictly earlier commits
-    val priorDirs = s"$storeDir/seed" +:
-      storeBatchIds(storeDir).filter(_ < batchId).map(i => s"$storeDir/b$i")
-    val storeAll = ss.read.parquet(priorDirs: _*)
+    val storeAll = digests.asOf(batchId)
     val store =
       if (bloomBits <= 0L) storeAll
       else graft.operators.Sketches.bloomSemiFilter(
@@ -152,7 +138,7 @@ object IngestPipeline {
         // hashes, so the no-false-negative guarantee carries over)
         hashed.select(xxhash64(col("h")).as("k")), "k",
         storeAll.withColumn("__k", xxhash64(col("h"))), "__k",
-        bloomItems, bloomBits).drop("__k")
+        100000L, bloomBits).drop("__k") // sized for 100k batch digests
     val fresh = Dedup.freshDigests(hashed, store)
     // one row per admitted digest: its min-id row. The join keys on the
     // digest AS WELL AS the id, so a doc_id repeated in the batch lands
@@ -161,11 +147,10 @@ object IngestPipeline {
     // near-dup admission against the band store AS OF this batch; the
     // admitted docs' band keys come back read off the admission's pins
     val (admitted, bandCommit) =
-      bandStoreDir.fold((survivors, Option.empty[(DataFrame, String)])) { bd =>
-        val bandPrior = ss.read.parquet(s"$bd/seed" +:
-          storeBatchIds(bd).filter(_ < batchId).map(i => s"$bd/b$i"): _*)
-        val (rows, keys) = Dedup.minhashAdmission(survivors, bandPrior)
-        (rows, Some(keys -> s"$bd/b$batchId"))
+      bandStoreDir.fold((survivors, Option.empty[(DataFrame, BatchKeyedStore)])) { bd =>
+        val bands = bandStore(bd)
+        val (rows, keys) = Dedup.minhashAdmission(survivors, bands.asOf(batchId))
+        (rows, Some(keys -> bands))
       }
     val kept = Corpus.resampleWithRates(admitted, rates)
       .select(col("doc_id"), col("lang"), col("text"))
@@ -174,8 +159,8 @@ object IngestPipeline {
     graft.sources.Sinks.writeCompacted(chunks, s"$outDir/batch_id=$batchId", targetRowsPerFile)
     // commit the batch's digests LAST (post-resample docs included:
     // a later duplicate of a sampled-out doc is still a duplicate)
-    survivors.select(col("h")).write.mode("overwrite").parquet(s"$storeDir/b$batchId")
-    bandCommit.foreach { case (keys, dir) => keys.write.mode("overwrite").parquet(dir) }
+    digests.commit(batchId, survivors.select(col("h")))
+    bandCommit.foreach { case (keys, bands) => bands.commit(batchId, keys) }
   }
 
   /** One micro-batch of PARAGRAPH-granularity incremental dedup — the
@@ -185,10 +170,9 @@ object IngestPipeline {
     * every later copy — same batch or any later one — drops; the
     * retroactive drop-ALL-copies form stays a batch job).
     *
-    * Same batch-keyed transaction discipline as [[ingestBatch]]: the
-    * paragraph-hash store is read AS OF this batch (seed + strictly
-    * earlier commits), the landing and the batch's newly-first hashes
-    * overwrite their own directories, so replays are idempotent.
+    * The paragraph-hash store is a [[BatchKeyedStore]] ([[paraStore]])
+    * and the landing overwrites its own `batch_id=N` directory, so
+    * replays are idempotent under the store's exactly-once rule.
     *
     * Scale shape per batch: the first-occurrence rule is a window over
     * the 8-byte paragraph hash (per-group rows = one paragraph's
@@ -212,17 +196,13 @@ object IngestPipeline {
     * re-run the whole dedup. */
   private def paraIngestLand(paras: DataFrame, batchId: Long, storeDir: String,
                              outDir: String, pinLanded: Boolean): DataFrame = {
-    val ss = paras.sparkSession
-    healStore(storeDir)
-    val priorDirs = s"$storeDir/seed" +:
-      storeBatchIds(storeDir).filter(_ < batchId).map(i => s"$storeDir/b$i")
-    val store = ss.read.parquet(priorDirs: _*)
+    val store = paraStore(storeDir)
     val hashed = paras.select(col("doc_id"), col("pos"), col("para"),
       xxhash64(col("para")).as("ph"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("ph")).orderBy(col("doc_id"), col("pos"))
     val flagged = hashed.withColumn("rn", row_number().over(w))
-      .join(store.select(col("ph")).distinct().withColumn("seen", lit(true)),
+      .join(store.asOf(batchId).select(col("ph")).distinct().withColumn("seen", lit(true)),
         Seq("ph"), "left")
       .withColumn("keep", col("rn") === 1 && col("seen").isNull)
       .truncateLineage // consumed twice: landing + store commit
@@ -236,8 +216,7 @@ object IngestPipeline {
     val landed = if (pinLanded) docsOut.truncateLineage else docsOut
     landed.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
     // commit ONLY newly-first hashes: in-store repeats are already there
-    flagged.where(col("keep")).select(col("ph")).distinct()
-      .write.mode("overwrite").parquet(s"$storeDir/b$batchId")
+    store.commit(batchId, flagged.where(col("keep")).select(col("ph")).distinct())
     landed
   }
 
@@ -247,14 +226,10 @@ object IngestPipeline {
     * paragraph granularity). Returns the landed per-document table. */
   def runParaIngest(spark: SparkSession, pageStream: DataFrame, storeDir: String,
                     outDir: String): DataFrame = {
-    val q = pageStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        paraIngestBatch(graft.operators.Html.extractBlocks(fanOut(batch.toDF(), "doc_id")),
-          batchId, storeDir, outDir)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(pageStream) { (batch, batchId) =>
+      paraIngestBatch(graft.operators.Html.extractBlocks(fanOut(batch, "doc_id")),
+        batchId, storeDir, outDir)
+    }
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("n_paras"), col("n_kept"), col("text"))
   }
@@ -282,32 +257,27 @@ object IngestPipeline {
     // loop-invariant dimension pinned once — a per-batch broadcast of
     // an unpinned langDim re-scans the dimension source every batch
     val langFrozen = langDim.truncateLineage
-    val q = containerStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val recs = graft.sources.Warc.records(batch.toDF().select(col("content")))
-        // the fixture's fetch_ts stamp is invertible (warc_ingest)
-        val pages = fanOut(
-          recs.select((col("fetch_ts") - 1700000000L).as("doc_id"), col("html")), "doc_id")
-        // pinLanded: the gate below reuses the batch's landed docs
-        // from the pin instead of re-reading the just-written parquet
-        val landed = paraIngestLand(graft.operators.Html.extractBlocks(pages),
-            batchId, storeDir, landDir, pinLanded = true)
-          .select(col("doc_id"), col("text"))
-        val gated = graft.operators.TextQuality.gopherQualityGate(landed)
-          .where(col("keep")).select(col("doc_id"))
-          .join(landed, Seq("doc_id"))
-          .join(langFrozen, Seq("doc_id"))
-        val mixed = gated.join(broadcast(rates), "lang")
-          .where(graft.operators.Corpus.hashPermille(col("text")) < col("keep_permille"))
-          .select(col("doc_id"), col("text"))
-        graft.operators.Corpus.priorityKeyed(mixed)
-          .orderBy(col("__key"), col("doc_id")).limit(k + 1)
-          .write.mode("overwrite").parquet(s"$frontierDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(containerStream) { (batch, batchId) =>
+      val recs = graft.sources.Warc.records(batch.select(col("content")))
+      // the fixture's fetch_ts stamp is invertible (warc_ingest)
+      val pages = fanOut(
+        recs.select((col("fetch_ts") - 1700000000L).as("doc_id"), col("html")), "doc_id")
+      // pinLanded: the gate below reuses the batch's landed docs
+      // from the pin instead of re-reading the just-written parquet
+      val landed = paraIngestLand(graft.operators.Html.extractBlocks(pages),
+          batchId, storeDir, landDir, pinLanded = true)
+        .select(col("doc_id"), col("text"))
+      val gated = graft.operators.TextQuality.gopherQualityGate(landed)
+        .where(col("keep")).select(col("doc_id"))
+        .join(landed, Seq("doc_id"))
+        .join(langFrozen, Seq("doc_id"))
+      val mixed = gated.join(broadcast(rates), "lang")
+        .where(graft.operators.Corpus.hashPermille(col("text")) < col("keep_permille"))
+        .select(col("doc_id"), col("text"))
+      graft.operators.Corpus.priorityKeyed(mixed)
+        .orderBy(col("__key"), col("doc_id")).limit(k + 1)
+        .write.mode("overwrite").parquet(s"$frontierDir/batch_id=$batchId")
+    }
     graft.operators.Corpus.priorityFinish(
       spark.read.parquet(frontierDir).select(col("doc_id"), col("weight"), col("__key")), k)
   }
@@ -354,19 +324,13 @@ object IngestPipeline {
     val canon = urlStream
       .select(Html.stripTrackingParams(col("url")).as("url"))
       .dropDuplicates("url")
-    val q = canon.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val urls = batch.toDF()
-        val graded = Html.blocklistFilter(urls, blockFrozen)
-          .join(Html.robotsFilter(urls, robotsFrozen)
-            .withColumnRenamed("rule", "robots_rule"), Seq("url"))
-          .withColumn("admitted", !col("blocked") && col("allowed"))
-        graded.write.mode("overwrite").parquet(s"$landDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(canon) { (urls, batchId) =>
+      val graded = Html.blocklistFilter(urls, blockFrozen)
+        .join(Html.robotsFilter(urls, robotsFrozen)
+          .withColumnRenamed("rule", "robots_rule"), Seq("url"))
+        .withColumn("admitted", !col("blocked") && col("allowed"))
+      graded.write.mode("overwrite").parquet(s"$landDir/batch_id=$batchId")
+    }
     spark.read.parquet(landDir)
       .select(col("url"), col("blocked"), col("rule_host"), col("rule_prefix"),
         col("allowed"), col("robots_rule"), col("admitted"))
@@ -386,18 +350,13 @@ object IngestPipeline {
   def runPrioritySampleIngest(spark: SparkSession, docStream: DataFrame,
                               outDir: String, k: Int): DataFrame = {
     require(k > 0, "runPrioritySampleIngest needs k > 0")
-    val q = docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // fanOut measured a NET LOSS here (priority keys are one md5
-        // per row — cheaper than shuffling the text): keep single-scan
-        graft.operators.Corpus.priorityKeyed(batch.toDF())
-          .orderBy(col("__key"), col("doc_id")).limit(k + 1)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(docStream) { (batch, batchId) =>
+      // fanOut measured a NET LOSS here (priority keys are one md5
+      // per row — cheaper than shuffling the text): keep single-scan
+      graft.operators.Corpus.priorityKeyed(batch)
+        .orderBy(col("__key"), col("doc_id")).limit(k + 1)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    }
     graft.operators.Corpus.priorityFinish(
       spark.read.parquet(outDir).select(col("doc_id"), col("weight"), col("__key")), k)
   }
@@ -406,22 +365,17 @@ object IngestPipeline {
     * batch's [[graft.operators.Corpus.datasetCardCube]] delta —
     * histogram-sized state (langs × sources × distinct doc lengths),
     * never rows — and (b) the batch's FIRST-SEEN text digests against
-    * the store AS OF this batch ([[ingestBatch]]'s transaction
-    * discipline), so the digest store's row count IS the stream's
-    * exact distinct-text count. Both commits are batch-keyed
-    * overwrites — replays are idempotent. */
+    * the digest store, so the store's row count IS the stream's exact
+    * distinct-text count. Both stores are [[BatchKeyedStore]]s, so
+    * replays are idempotent under its exactly-once rule. */
   def cardBatch(batch: DataFrame, batchId: Long, cubeDir: String,
                 digestDir: String): Unit = {
-    val ss = batch.sparkSession
     val batchP = fanOut(batch, "doc_id") // sha256 + token histogram parallel
-    healStore(digestDir)
-    graft.operators.Corpus.datasetCardCube(batchP)
-      .write.mode("overwrite").parquet(s"$cubeDir/b$batchId")
-    val priorDirs = s"$digestDir/seed" +:
-      storeBatchIds(digestDir).filter(_ < batchId).map(i => s"$digestDir/b$i")
-    val store = ss.read.parquet(priorDirs: _*)
-    Dedup.incrementalDigestDedup(batchP, store).select(col("h"))
-      .write.mode("overwrite").parquet(s"$digestDir/b$batchId")
+    val cube = Corpus.datasetCardCube(batchP)
+    BatchKeyedStore(cubeDir, cube.schema).commit(batchId, cube)
+    val digests = digestStore(digestDir)
+    digests.commit(batchId,
+      Dedup.incrementalDigestDedup(batchP, digests.asOf(batchId)).select(col("h")))
   }
 
   /** The dataset card maintained INCREMENTALLY: drain the doc stream
@@ -431,28 +385,23 @@ object IngestPipeline {
     * [[graft.operators.Corpus.datasetCard]], which is the oracle. */
   def runCardIngest(spark: SparkSession, docStream: DataFrame,
                     cubeDir: String, digestDir: String): DataFrame = {
-    // empty digest seed: the stream starts with no history
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField("h", StringType))))
-      .write.mode("overwrite").parquet(s"$digestDir/seed")
-    val q = docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cardBatch(batch.toDF(), batchId, cubeDir, digestDir)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val cube = spark.read.parquet(
-      storeBatchIds(cubeDir).map(i => s"$cubeDir/b$i"): _*)
+    // both stores start empty: the stream has no history (and a stream
+    // that delivers nothing still finishes over a typed, empty cube)
+    val noDocs = spark.createDataFrame(java.util.Collections.emptyList[Row](), docStream.schema)
+    val noCube = Corpus.datasetCardCube(noDocs)
+    val cubes = BatchKeyedStore(cubeDir, noCube.schema)
+    cubes.seed(noCube)
+    val digests = digestStore(digestDir)
+    digests.seed(noDocs.select(sha2(col("text"), 256).as("h")))
+    drain(docStream) { (batch, batchId) =>
+      cardBatch(batch, batchId, cubeDir, digestDir)
+    }
+    val cube = cubes.asOf(Long.MaxValue)
       .groupBy(col("lang"), col("source"), col("n_toks"))
       .agg(sum(col("cnt")).as("cnt"), sum(col("chars")).as("chars"),
         sum(col("n_pass")).as("n_pass"))
-    healStore(digestDir)
-    val digestDirs = s"$digestDir/seed" +:
-      storeBatchIds(digestDir).map(i => s"$digestDir/b$i")
-    val nDistinct = spark.read.parquet(digestDirs: _*)
-      .agg(count(lit(1)).as("n_distinct"))
-    graft.operators.Corpus.datasetCardFromCube(cube, nDistinct)
+    val nDistinct = digests.asOf(Long.MaxValue).agg(count(lit(1)).as("n_distinct"))
+    Corpus.datasetCardFromCube(cube, nDistinct)
   }
 
   /** One micro-batch of CONTINUOUS winnowing copy detection — the
@@ -468,13 +417,13 @@ object IngestPipeline {
     * fingerprint, so a re-posted copy cannot slip past the detector
     * by arriving in a later crawl drop. Per-batch state: the batch's
     * own capped fingerprint set; the store probe is one 8-byte-keyed
-    * join; replays are idempotent (batch-keyed overwrites, store read
-    * AS OF the batch). */
+    * join; the store is a [[BatchKeyedStore]] and the landing overwrites
+    * its own `batch_id=N`, so replays are idempotent under the store's
+    * exactly-once rule. */
   def winnowBatch(batch: DataFrame, batchId: Long, fpStoreDir: String,
                   outDir: String, minShared: Int = 2, maxDf: Int = 50,
                   k: Int = 3, w: Int = 4): Unit = {
-    val ss = batch.sparkSession
-    healStore(fpStoreDir)
+    val store = fpStore(fpStoreDir)
     val fpsAll = Dedup.winnowingFingerprints(fanOut(batch, "doc_id"), k, w)
       .select(col("doc_id"), col("fp")).distinct()
     val rare = fpsAll.groupBy(col("fp")).agg(count(lit(1)).as("df"))
@@ -485,16 +434,12 @@ object IngestPipeline {
       .groupBy(col("x.doc_id").as("doc_id"), col("y.doc_id").as("mate"))
       .agg(count(lit(1)).as("n")).where(col("n") >= minShared)
       .select(col("doc_id"))
-    val priorDirs = s"$fpStoreDir/seed" +:
-      storeBatchIds(fpStoreDir).filter(_ < batchId).map(i => s"$fpStoreDir/b$i")
-    val store = ss.read.parquet(priorDirs: _*)
-    val storeRej = fps.join(store.select(col("doc_id").as("e"), col("fp")), "fp")
+    val storeRej = fps.join(store.asOf(batchId).select(col("doc_id").as("e"), col("fp")), "fp")
       .groupBy(col("doc_id"), col("e")).agg(count(lit(1)).as("n"))
       .where(col("n") >= minShared).select(col("doc_id"))
     val rejected = mateRej.unionByName(storeRej).distinct().truncateLineage
     val admitted = batch.select(col("doc_id")).join(rejected, Seq("doc_id"), "left_anti")
-    fps.join(admitted, Seq("doc_id")).select(col("doc_id"), col("fp"))
-      .write.mode("overwrite").parquet(s"$fpStoreDir/b$batchId")
+    store.commit(batchId, fps.join(admitted, Seq("doc_id")).select(col("doc_id"), col("fp")))
     admitted.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
   }
 
@@ -503,55 +448,17 @@ object IngestPipeline {
   def runWinnowIngest(spark: SparkSession, docStream: DataFrame,
                       fpStoreDir: String, outDir: String,
                       minShared: Int = 2, maxDf: Int = 50): DataFrame = {
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField("doc_id", LongType), StructField("fp", LongType))))
-      .write.mode("overwrite").parquet(s"$fpStoreDir/seed")
-    val q = docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        winnowBatch(batch.toDF(), batchId, fpStoreDir, outDir, minShared, maxDf)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val store = fpStore(fpStoreDir)
+    store.seed(spark.createDataFrame(java.util.Collections.emptyList[Row](), store.schema))
+    drain(docStream) { (batch, batchId) =>
+      winnowBatch(batch, batchId, fpStoreDir, outDir, minShared, maxDf)
+    }
     spark.read.parquet(outDir).select(col("doc_id"))
   }
 
-  /** Fold finalized batch commits into the seed — the store's
-    * compaction. Without it the digest store is seed + one directory
-    * per micro-batch forever, and every batch's scan unions an
-    * ever-growing dir list. Merging `b0..bThroughBatch` into the seed
-    * (distinct, one write, then retire the batch dirs) keeps the dir
-    * list bounded by compaction cadence.
-    *
-    * FINALIZATION CONTRACT: only compact batches that can no longer
-    * replay (their offsets are committed in the stream's checkpoint) —
-    * a replayed batch must see the store AS OF its original run, and
-    * compaction folds later digests into the seed where an earlier
-    * replay would wrongly dedup against them. The caller owns that
-    * horizon, exactly like a lake vacuum owns its retention window.
-    * Returns the number of batch dirs retired. */
-  def compactStore(spark: SparkSession, storeDir: String, throughBatch: Long): Long = {
-    healStore(storeDir)
-    val ids = storeBatchIds(storeDir).filter(_ <= throughBatch)
-    if (ids.isEmpty) return 0L
-    val dirs = s"$storeDir/seed" +: ids.map(i => s"$storeDir/b$i")
-    val merged = spark.read.parquet(dirs: _*).distinct()
-    val staging = s"$storeDir/.seed_next"
-    merged.coalesce(1).write.mode("overwrite").parquet(staging)
-    // swap by METADATA renames, never an rm of live data: the only
-    // crash window with no seed dir is between the two renames, and
-    // healStore (run before every store read) completes the swap from
-    // the surviving .seed_next. The old seed is deleted LAST.
-    val seed = new java.io.File(s"$storeDir/seed")
-    val old = new java.io.File(s"$storeDir/.seed_old")
-    graft.sources.FsUtil.deleteRecursively(old)
-    require(seed.renameTo(old), s"store compaction: could not set aside $seed")
-    require(new java.io.File(staging).renameTo(seed),
-      s"store compaction swap failed in $storeDir")
-    ids.foreach(i => graft.sources.FsUtil.deleteRecursively(new java.io.File(s"$storeDir/b$i")))
-    graft.sources.FsUtil.deleteRecursively(old)
-    ids.size.toLong
-  }
+  /** [[BatchKeyedStore.compact]] on the digest store at `storeDir`. */
+  def compactStore(spark: SparkSession, storeDir: String, throughBatch: Long): Long =
+    digestStore(storeDir).compact(throughBatch)
 
   /** Run the ingest against a bounded source dir to completion and
     * return the landed chunk table. `storeDir` must contain the
@@ -559,10 +466,9 @@ object IngestPipeline {
   def runIngest(spark: SparkSession, srcDir: String, storeDir: String,
                 rates: DataFrame, outDir: String, targetRowsPerFile: Long,
                 chunkSize: Int = 256, bloomBits: Long = 0L,
-                bloomItems: Long = 100000L,
                 bandStoreDir: Option[String] = None): DataFrame =
     runIngestStream(spark, readDocStream(spark, srcDir), storeDir, rates,
-      outDir, targetRowsPerFile, chunkSize, bloomBits, bloomItems, bandStoreDir)
+      outDir, targetRowsPerFile, chunkSize, bloomBits, bandStoreDir)
 
   /** [[runIngest]] over a CALLER-BUILT streaming DataFrame of
     * (doc_id, lang, text) — the seam that lets an upstream extraction
@@ -571,20 +477,15 @@ object IngestPipeline {
   def runIngestStream(spark: SparkSession, docStream: DataFrame, storeDir: String,
                       rates: DataFrame, outDir: String, targetRowsPerFile: Long,
                       chunkSize: Int = 256, bloomBits: Long = 0L,
-                      bloomItems: Long = 100000L,
                       bandStoreDir: Option[String] = None): DataFrame = {
     // pin the loop-invariant policy ONCE (optimization r17): rates is
     // typically a corpus-scale aggregate, and the per-batch broadcast
     // otherwise recomputes it from source every micro-batch
     val frozenRates = rates.truncateLineage
-    val q = docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestBatch(batch.toDF(), batchId, storeDir, frozenRates, outDir,
-          targetRowsPerFile, chunkSize, bloomBits, bloomItems, bandStoreDir)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(docStream) { (batch, batchId) =>
+      ingestBatch(batch, batchId, storeDir, frozenRates, outDir,
+        targetRowsPerFile, chunkSize, bloomBits, bandStoreDir)
+    }
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("lang"), col("chunk_idx"), col("chunk"))
   }
@@ -613,17 +514,12 @@ object IngestPipeline {
     // stays ≤ m rows on a firehose whose union vocabulary would not
     // ship (the dsir_select_hashed posture, streaming half)
     val frozen = model.truncateLineage
-    val q = docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // fanOut measured +26% here (the scorer's explode+broadcast
-        // probe is cheaper than shuffling the text payload): single-scan
-        scorer(batch.toDF(), frozen)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(docStream) { (batch, batchId) =>
+      // fanOut measured +26% here (the scorer's explode+broadcast
+      // probe is cheaper than shuffling the text payload): single-scan
+      scorer(batch, frozen)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    }
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("n_tokens"),
         round(col("sl").cast(DoubleType), 6).as("dsir_logw"),
@@ -661,21 +557,16 @@ object IngestPipeline {
     val landPath = new org.apache.hadoop.fs.Path(landDir)
     landPath.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(landPath, true)
-    val q = docStream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // fanOut measured 2.15x SLOWER here — render/parse is one
-        // regex split per transcript, far cheaper than shuffling the
-        // transcripts; keep the batch single-scan
-        val turns = PostTraining.parseTurns(
-          PostTraining.renderTranscripts(batch.toDF()))
-        PostTraining.conversationAudit(turns)
-          .join(PostTraining.responseFingerprints(turns), Seq("conv_id"), "left")
-          .write.mode("overwrite").parquet(s"$landDir/batch_id=$batchId")
-        ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(docStream) { (batch, batchId) =>
+      // fanOut measured 2.15x SLOWER here — render/parse is one
+      // regex split per transcript, far cheaper than shuffling the
+      // transcripts; keep the batch single-scan
+      val turns = PostTraining.parseTurns(
+        PostTraining.renderTranscripts(batch))
+      PostTraining.conversationAudit(turns)
+        .join(PostTraining.responseFingerprints(turns), Seq("conv_id"), "left")
+        .write.mode("overwrite").parquet(s"$landDir/batch_id=$batchId")
+    }
     // zero-micro-batch guard (ADVICE r16): the landing dir was
     // cleared up front, so a stream that delivered nothing leaves no
     // directory to read — return an empty, schema-bearing admission

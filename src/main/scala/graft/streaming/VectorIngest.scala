@@ -91,14 +91,10 @@ object VectorIngest {
     val cents = spark.read.parquet(s"$indexDir/coarse_cents").truncateLineage
     val books = spark.read.parquet(s"$indexDir/books").truncateLineage
     val baseline = spark.read.parquet(s"$indexDir/baseline").truncateLineage
-    val q = readVecStream(spark, srcDir).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestBatchFrozen(batch.toDF(), batchId, indexDir, cents, books, baseline,
-          m, dim, threshold, minBatchPerCell)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    drain(readVecStream(spark, srcDir)) { (batch, batchId) =>
+      ingestBatchFrozen(batch, batchId, indexDir, cents, books, baseline,
+        m, dim, threshold, minBatchPerCell)
+    }
     // a drain that found nothing to drain is a no-op, not an error:
     // with zero micro-batches the drift dir was never created
     if (new java.io.File(s"$indexDir/drift").exists())

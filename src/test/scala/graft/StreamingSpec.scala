@@ -434,19 +434,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("foreachBatch parquet sink lands every micro-batch exactly once") {
-    val dir = Files.createTempDirectory("graft-stream-fb").toString
-    writeBatches(dir)
-    val out = Files.createTempDirectory("graft-fb-out").toString
-    EventStreams.runToParquet(
-      EventStreams.readEventStream(spark, s"$dir/{b0,b1,b2}"), out)
-    val landed = spark.read.parquet(out)
-    assert(landed.select("event_id").collect().map(_.getLong(0)).sorted.toSeq
-      === events.map(_._1).sorted)
-    // multi-batch source really produced multiple batch_id partitions
-    assert(landed.select("batch_id").distinct().count() === 3)
-  }
-
   test("foreachBatch compacted sink governs file sizes and loses nothing") {
     // larger corpus so the compaction policy has something to govern:
     // 120 rows over three drops of 40
@@ -737,6 +724,22 @@ class StreamingSpec extends AnyFunSuite {
     } finally spark.streams.removeListener(listener)
     val got = (0 until sizes.size).map(b => inputRows.get(b.toLong))
     assert(got === sizes.map(_.toLong))
+  }
+
+  test("streaming dataset card over a source with no files equals the batch card of no documents") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    import graft.streaming.IngestPipeline
+    val schema = StructType.fromDDL("doc_id LONG, lang STRING, source STRING, text STRING")
+    val src = Files.createTempDirectory("graft-card-empty-src").toString
+    val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+    val card = IngestPipeline.runCardIngest(spark, stream,
+      Files.createTempDirectory("graft-card-empty-cube").toString,
+      Files.createTempDirectory("graft-card-empty-digest").toString)
+    val want = graft.operators.Corpus.datasetCard(
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
+    assert(card.schema === want.schema)
+    assert(card.collect().toSeq === want.collect().toSeq)
   }
 
   test("streaming ANN ingest: grown index == batch append, replay idempotent, OOD batch flags rebuild") {
